@@ -20,11 +20,14 @@ Scale design applied throughout:
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_python_sqlite_spark.operators.cache import (
+    STAGE_TABLE_ATTR,
+    StageMemo,
+    bucketed_stage_table,
+)
 from etl_python_sqlite_spark.sources.parquet import load_table as table
 
 
@@ -1907,35 +1910,15 @@ def ts_gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gap_fill_interpolate(obs)
 
 
-def _data_fingerprint(spark: SparkSession, sf_dir: str, name: str) -> tuple:
-    """File-listing fingerprint folded into the shared-stage memo keys
-    (stale-data guard, VERDICT r6 #3) — see sources/parquet.py."""
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
-
-    return data_fingerprint(spark, sf_dir, name)
-
-
-#: (applicationId, sf_dir) → persisted per-flag cents histogram, shared
-#: by robust_price_stats and mad_outlier_scan (VERDICT r5 #3: the two
-#: queries build the IDENTICAL groupBy(l_returnflag, cents) roll-up over
-#: the same table — one scan should feed both). Session-scoped on
-#: purpose: the frame is bounded by the price DOMAIN (≤ ~10^7 distinct
-#: cents × 3 flags), not by data volume, so it is a legitimate
-#: materialized shared stage, like a dimension cache — at 100 TB the
-#: histogram is the SAME size. LRU-capped at 2 (sf_dir, app) pairs;
-#: release explicitly via release_shared_histograms() (tests).
-_FLAG_HIST_MEMO: dict = {}
+#: Persisted per-flag cents histogram, shared by robust_price_stats and
+#: mad_outlier_scan (VERDICT r5 #3: the two queries build the IDENTICAL
+#: groupBy(l_returnflag, cents) roll-up over the same table — one scan
+#: should feed both). Session-scoped on purpose: the frame is bounded
+#: by the price DOMAIN (≤ ~10^7 distinct cents × 3 flags), not by data
+#: volume, so it is a legitimate materialized shared stage, like a
+#: dimension cache — at 100 TB the histogram is the SAME size.
 _FLAG_HIST_MAX = 2
-#: One RE-ENTRANT lock guards BOTH order-statistics memos end-to-end
-#: (check → build → eager count → insert): robust_price_stats and
-#: mad_outlier_scan run as separate CONCURRENT actions in the bench, and
-#: without the lock two simultaneous misses build two persisted frames
-#: and one leaks unpersisted. Holding the lock across the eager count
-#: deliberately serializes the FIRST build — the second caller blocks
-#: briefly and then reads the warm cache instead of racing to recompute
-#: the whole lineitem scan (CLAUDE.md multi-consumer-stage invariant).
-#: RLock because _flag_cents_cum builds via _flag_cents_hist.
-_FLAG_MEMO_LOCK = threading.RLock()
+_FLAG_HIST_MEMO = StageMemo(_FLAG_HIST_MAX)
 
 
 def _flag_cents_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1945,69 +1928,38 @@ def _flag_cents_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry is published: the two consumers are separate concurrent
     actions, so a lazily-persisted frame lets them race to recompute the
     full lineitem scan before the cache lands. Every consumer (either
-    query, either rank pick, the final aggregates) reads the cache.
+    query, either rank pick, the final aggregates) reads the cache."""
 
-    The memo key carries a file-listing fingerprint of the source table
-    (names + sizes + mtimes): rewriting the parquet under a live session
-    changes the key, so the stale cached stage is never served — it ages
-    out of the LRU as fresh keys land."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _data_fingerprint(spark, sf_dir, "lineitem"),
-    )
-    with _FLAG_MEMO_LOCK:
-        hit = _FLAG_HIST_MEMO.pop(key, None)
-        if hit is not None:
-            _FLAG_HIST_MEMO[key] = hit  # re-insert: LRU refresh
-            return hit
+    def build(_key):
         li = table(spark, sf_dir, "lineitem")
         cents = F.floor(F.col("l_extendedprice") * 100).cast("long")
         hist = li.groupBy("l_returnflag", cents.alias("c")).agg(
             F.count("*").alias("cnt")
         ).persist()
         hist.count()  # eager: warm the cache before any consumer action
-        while len(_FLAG_HIST_MEMO) >= _FLAG_HIST_MAX:
-            # evict the LEAST recently used — dicts iterate in insertion
-            # order and hits re-insert, so the first key is the oldest
-            # (popitem() would pop the NEWEST — LIFO, not LRU)
-            oldest = next(iter(_FLAG_HIST_MEMO))
-            old = _FLAG_HIST_MEMO.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _FLAG_HIST_MEMO[key] = hist
         return hist
 
+    return _FLAG_HIST_MEMO.get(spark, sf_dir, "lineitem", build=build)
 
-#: (applicationId, sf_dir, fingerprint) → persisted CUMULATIVE per-flag
-#: cents histogram (flag, c, cnt, cum, n, med) — the second shared
-#: stage of the order-statistics pair (r7): the ordered cumulative-sum
-#: window is the expensive half of every rank pick (0.6 s of the
-#: pair's wall at sf0.1: a 3-partition sort, parallelism bounded by
-#: the FLAG DOMAIN, not the cluster), and it is identical for
-#: robust_price_stats and mad_outlier_scan — so it is computed once,
-#: with the median (rank (n+1)/2) pre-picked since it costs one more
-#: window over the already-sorted run. Same size bound as the raw
-#: histogram (one row per distinct (flag, cents)).
-_FLAG_CUM_MEMO: dict = {}
+
+#: Persisted CUMULATIVE per-flag cents histogram (flag, c, cnt, cum, n,
+#: med) — the second shared stage of the order-statistics pair (r7):
+#: the ordered cumulative-sum window is the expensive half of every
+#: rank pick (0.6 s of the pair's wall at sf0.1: a 3-partition sort,
+#: parallelism bounded by the FLAG DOMAIN, not the cluster), and it is
+#: identical for robust_price_stats and mad_outlier_scan — so it is
+#: computed once, with the median (rank (n+1)/2) pre-picked since it
+#: costs one more window over the already-sorted run. Same size bound
+#: as the raw histogram (one row per distinct (flag, cents)).
+_FLAG_CUM_MEMO = StageMemo(_FLAG_HIST_MAX)
 
 
 def _flag_cents_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (flag, c, cnt, cum, n, med) cumulative histogram —
-    persisted AND eagerly counted under the shared memo lock before
-    publication (same concurrent-consumer race as _flag_cents_hist)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _data_fingerprint(spark, sf_dir, "lineitem"),
-    )
-    with _FLAG_MEMO_LOCK:
-        hit = _FLAG_CUM_MEMO.pop(key, None)
-        if hit is not None:
-            _FLAG_CUM_MEMO[key] = hit  # LRU refresh
-            return hit
+    persisted AND eagerly counted before publication (same
+    concurrent-consumer race as _flag_cents_hist)."""
+
+    def build(_key):
         hist = _flag_cents_hist(spark, sf_dir)
         wv = Window.partitionBy("l_returnflag").orderBy("c")
         wall = Window.partitionBy("l_returnflag")
@@ -2033,29 +1985,19 @@ def _flag_cents_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
         cum.count()  # eager: warm before any consumer action
-        while len(_FLAG_CUM_MEMO) >= _FLAG_HIST_MAX:
-            oldest = next(iter(_FLAG_CUM_MEMO))
-            old = _FLAG_CUM_MEMO.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _FLAG_CUM_MEMO[key] = cum
         return cum
 
+    return _FLAG_CUM_MEMO.get(spark, sf_dir, "lineitem", build=build)
 
-#: (applicationId, sf_dir) → persisted DISTINCT undirected (u < v) part
-#: co-occurrence edge frame — the shared first stage of the graph query
-#: family (part_cooccurrence_pagerank / part_triangle_stats both derive
-#: from it; pagerank's directed set is exactly the union of the two
+
+#: DISTINCT undirected (u < v) part co-occurrence edge frame — the
+#: shared first stage of the graph query family
+#: (part_cooccurrence_pagerank / part_triangle_stats both derive from
+#: it; pagerank's directed set is exactly the union of the two
 #: orientations of this distinct set, so ONE self-join + distinct feeds
-#: both). Unlike the cents histogram this frame is DATA-sized, so the
-#: at-100 TB policy is different: there it should be a materialized
-#: table partitioned by u (a cached common stage, written once per
-#:  lineitem snapshot), not executor memory — the memo is the local-
-#: mode rendition of that shared stage, same LRU cap + explicit
-#: release as the histogram memo.
-_COOCC_MEMO: dict = {}
+#: both). Unlike the cents histogram this frame is DATA-sized: at scale
+#: it becomes a bucketed table (below), not executor memory.
+_COOCC_MEMO = StageMemo(_FLAG_HIST_MAX)
 
 #: Canonical edge count above which the shared co-occurrence stage
 #: materializes as a BUCKETED CATALOG TABLE (bucketBy u, the graph
@@ -2073,123 +2015,27 @@ _COOCC_MEMO: dict = {}
 #: 20 M knee as TRIANGLE_BROADCAST_MAX_EDGES, measured independently.
 COOCC_BUCKETED_STAGE_MIN_EDGES = 20_000_000
 COOCC_STAGE_BUCKETS = 32
-_COOCC_TABLE_ATTR = "_spark_graft_coocc_table"
+_COOCC_TABLE_ATTR = STAGE_TABLE_ATTR
 #: canonical (u < v) row count, measured once at stage build — lets
 #: consumers (pagerank's tier gate) skip a per-invocation count() job
 _COOCC_NEDGES_ATTR = "_spark_graft_coocc_nedges"
-#: Same concurrent-consumer discipline as the cents-histogram memos:
-#: triangle + pagerank run as separate concurrent bench actions, so the
-#: memo get-or-build holds one lock end-to-end — a simultaneous miss
-#: otherwise double-builds the edge stage and leaks one persisted frame
-#: (or worse, two saveAsTable writers race on the same table name).
-_COOCC_MEMO_LOCK = threading.Lock()
-#: Stage tables this SESSION created (name → applicationId); used by the
-#: stale-table sweep below to recognize its own live tables.
-_COOCC_LIVE_TABLES: set = set()
-_COOCC_SWEPT_APPS: set = set()
-#: A coocc stage table is built and consumed within one bench/probe run
-#: (minutes); an ORPHAN survives across rounds. 1 h is far above any
-#: live table's lifetime and far below an orphan's.
-_COOCC_ORPHAN_AGE_MS = 60 * 60 * 1000
-
-
-def _sweep_stale_coocc_tables(spark: SparkSession) -> None:
-    sweep_stale_stage_tables(spark, "coocc_edges_", _COOCC_LIVE_TABLES)
-
-
-def sweep_stale_stage_tables(
-    spark: SparkSession, prefix: str, live_tables: set
-) -> None:
-    """Drop orphaned ``{prefix}*`` stage tables left by a crashed or
-    restarted session (their memo keys embed the old applicationId, so
-    no later session will ever name them — without this sweep the
-    warehouse files accumulate forever). Runs once per (application,
-    prefix), at first stage build, and only touches tables this session
-    did NOT create AND whose backing files predate this application's
-    start: a CONCURRENT Spark app sharing the warehouse (bench +
-    probe/pytest co-running from /root/repo) has live stage tables
-    whose md5 names embed the other app's id — name-wise
-    indistinguishable from orphans. Guard: drop only tables whose
-    directory mtime BOTH predates this app's start AND is older than an
-    absolute age floor (covers the peer that started before us — stage
-    tables live for minutes, orphans for rounds), so a live peer table
-    is never swept while true orphans still age out (ADVICE r8).
-
-    Shared by every bucketed-tier shared stage (co-occurrence edges,
-    minhash pairs) — same lifecycle, one implementation."""
-    import time as _time
-
-    app = spark.sparkContext.applicationId
-    if (app, prefix) in _COOCC_SWEPT_APPS:
-        return
-    _COOCC_SWEPT_APPS.add((app, prefix))
-    cutoff_ms = min(
-        spark.sparkContext.startTime,
-        int(_time.time() * 1000) - _COOCC_ORPHAN_AGE_MS,
-    )
-    try:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        for t in spark.catalog.listTables():
-            name = t.name
-            if not name.startswith(prefix) or name in live_tables:
-                continue
-            try:
-                p = jvm.org.apache.hadoop.fs.Path(warehouse, name)
-                fs = p.getFileSystem(hconf)
-                if (
-                    fs.exists(p)
-                    and fs.getFileStatus(p).getModificationTime() >= cutoff_ms
-                ):
-                    continue  # plausibly a concurrent app's live table
-            except Exception:
-                continue  # can't date it — leave it rather than break a peer
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-    except Exception:
-        pass  # catalog unavailable (stopping session) — leave for next run
-
-
-def _release_coocc_entry(old: DataFrame) -> None:
-    """Free one memo entry: unpersist a cached frame; DROP a bucketed
-    stage table (files + catalog entry)."""
-    tbl = getattr(old, _COOCC_TABLE_ATTR, None)
-    try:
-        if tbl is not None:
-            _COOCC_LIVE_TABLES.discard(tbl)
-            old.sparkSession.sql(f"DROP TABLE IF EXISTS {tbl}")
-        else:
-            old.unpersist()
-    except Exception:
-        pass  # session already stopped
 
 
 def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE distinct (u < v) part co-occurrence edge frame per session
     and dataset, memoized; the per-order pair blocking is
-    O(rows · basket), never corpus-quadratic. Keyed on the lineitem
-    file-listing fingerprint like the cents histogram (stale-data
-    guard, VERDICT r6 #3).
+    O(rows · basket), never corpus-quadratic.
 
     Two storage tiers, gated on the measured edge count
     (``COOCC_BUCKETED_STAGE_MIN_EDGES``): an executor-memory cache for
     graphs that fit, and a catalog table bucketed by ``u`` for those
     that don't — the bucketed scan satisfies HashPartitioning(u), so
     the graph family's outdeg aggregation and rank joins read it with
-    ZERO exchanges of E (the frame carries ``_spark_graft_coocc_table``
-    so consumers can skip their own repartition; see
+    ZERO exchanges of E (the frame carries ``_COOCC_TABLE_ATTR`` so
+    consumers can skip their own repartition; see
     ``pagerank(edges_bucketed=True)``)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _data_fingerprint(spark, sf_dir, "lineitem"),
-    )
-    with _COOCC_MEMO_LOCK:
-        hit = _COOCC_MEMO.pop(key, None)
-        if hit is not None:
-            _COOCC_MEMO[key] = hit  # LRU refresh
-            return hit
-        _sweep_stale_coocc_tables(spark)
+
+    def build(key):
         # shared (order, part) distinct stage — memoized with
         # part_basket_pairs (r11-opt); the memo owns its lifecycle
         op = _ordpart_distinct(spark, sf_dir)
@@ -2208,51 +2054,25 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         n_edges = e.count()
         if n_edges >= COOCC_BUCKETED_STAGE_MIN_EDGES:
-            import hashlib
-
             # materialize the DIRECTED set (both orientations —
             # pagerank's layout; triangle's canonical u<v set is a
             # filter over the same bucketed scan, zero extra storage).
             # Disjoint halves, so the union is distinct by construction.
-            tbl = (
-                "coocc_edges_"
-                + hashlib.md5(repr(key).encode()).hexdigest()[:12]
-            )
             directed = e.union(
                 e.select(F.col("v").alias("u"), F.col("u").alias("v"))
             )
-            (
-                directed.write.mode("overwrite")
-                .bucketBy(COOCC_STAGE_BUCKETS, "u")
-                .sortBy("u")
-                .saveAsTable(tbl)
+            canon = bucketed_stage_table(
+                directed, "coocc_edges_", key, COOCC_STAGE_BUCKETS, ("u",),
+                view=lambda t: t.filter(F.col("u") < F.col("v")),
             )
             e.unpersist()  # the bucketed files are the materialization
-            from etl_python_sqlite_spark.operators.cache import (
-                tie_stage_table,
-            )
-
-            e = spark.table(tbl).filter(F.col("u") < F.col("v"))
-            setattr(e, _COOCC_TABLE_ATTR, tbl)
-            _COOCC_LIVE_TABLES.add(tbl)
-            e = tie_stage_table(
-                e,
-                lambda s=spark, t=tbl: (
-                    _COOCC_LIVE_TABLES.discard(t),
-                    s.sql(f"DROP TABLE IF EXISTS {t}"),
-                ),
-            )
+            e = canon
         # the measured canonical count rides the handle (both tiers) so
         # consumers' size gates need no count() job of their own
         setattr(e, _COOCC_NEDGES_ATTR, n_edges)
-        while len(_COOCC_MEMO) >= _FLAG_HIST_MAX:
-            # reference drop only: a table-tier entry's DROP fires via
-            # its tie_stage_table finalizer once the LAST consumer lets
-            # go (code-review r11: an immediate DROP here would fail a
-            # still-live consumer's next action)
-            _COOCC_MEMO.pop(next(iter(_COOCC_MEMO)))
-        _COOCC_MEMO[key] = e
         return e
+
+    return _COOCC_MEMO.get(spark, sf_dir, "lineitem", build=build)
 
 
 def _cooccurrence_edges_directed(
@@ -2281,58 +2101,33 @@ def _cooccurrence_edges_directed(
     )
 
 
-#: (applicationId, sf_dir, fingerprint) → persisted DISTINCT
-#: (l_orderkey, l_partkey) frame — the per-order basket stage shared by
-#: part_basket_pairs (every invocation was re-scanning lineitem and
-#: re-shuffling the distinct: 0.9 s at sf0.1) and the co-occurrence
-#: edge build (same first stage). Same policy as the other cache-tier
-#: memos: lock across get-or-build, LRU cap, explicit unpersist on
-#: eviction/release.
-_ORDPART_MEMO: dict = {}
-_ORDPART_LOCK = threading.Lock()
+#: DISTINCT (l_orderkey, l_partkey) frame — the per-order basket stage
+#: shared by part_basket_pairs (every invocation was re-scanning
+#: lineitem and re-shuffling the distinct: 0.9 s at sf0.1) and the
+#: co-occurrence edge build (same first stage).
+_ORDPART_MEMO = StageMemo(_FLAG_HIST_MAX)
 
 
 def _ordpart_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _data_fingerprint(spark, sf_dir, "lineitem"),
-    )
-    with _ORDPART_LOCK:
-        hit = _ORDPART_MEMO.pop(key, None)
-        if hit is not None:
-            _ORDPART_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build(_key):
         li = table(spark, sf_dir, "lineitem")
         op = li.select("l_orderkey", "l_partkey").distinct().persist()
         op.count()  # self-join consumers in concurrent bench actions
-        while len(_ORDPART_MEMO) >= _FLAG_HIST_MAX:
-            # true LRU: evict the OLDEST entry (popitem() pops the
-            # newest — the _flag_cents_hist documented pitfall)
-            oldest = next(iter(_ORDPART_MEMO))
-            old = _ORDPART_MEMO.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _ORDPART_MEMO[key] = op
         return op
 
+    return _ORDPART_MEMO.get(spark, sf_dir, "lineitem", build=build)
 
-#: (applicationId, sf_dir, fingerprint) → (eor, deg, n_edges, coocc
-#: handle): the degree-ORIENTED edge stage (operators/graph
-#: .orient_edges over the memoized co-occurrence frame), persisted +
-#: eagerly counted once per session. r11-opt: part_triangle_stats was
-#: rebuilding this orientation (degree agg + two joins + repartition +
-#: persist + count ≈ 1.35 s at sf0.1) on EVERY invocation even though
-#: it is a pure function of the memoized edge set — same shared-stage
-#: policy as the cents-histogram second stage (_flag_cents_cum). The
-#: held coocc handle keeps the parent memo entry alive (tie
-#: composition rule); eviction unpersists the derived frames
-#: explicitly (cache-tier unpersist under a live consumer only
-#: recomputes, never fails).
-_TRI_STAGE_MEMO: dict = {}
-_TRI_STAGE_LOCK = threading.Lock()
+
+#: (eor, deg, n_edges, coocc handle): the degree-ORIENTED edge stage
+#: (operators/graph.orient_edges over the memoized co-occurrence
+#: frame), persisted + eagerly counted once per session. r11-opt:
+#: part_triangle_stats was rebuilding this orientation (degree agg +
+#: two joins + repartition + persist + count ≈ 1.35 s at sf0.1) on
+#: EVERY invocation even though it is a pure function of the memoized
+#: edge set. The held coocc handle keeps the parent memo entry alive
+#: (tie composition rule); it belongs to _COOCC_MEMO, so evicting this
+#: entry never frees it.
+_TRI_STAGE_MEMO = StageMemo(_FLAG_HIST_MAX)
 
 
 def _triangle_oriented_stage(
@@ -2340,63 +2135,24 @@ def _triangle_oriented_stage(
 ) -> tuple[DataFrame, DataFrame, int, DataFrame]:
     from etl_python_sqlite_spark.operators.graph import orient_edges
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _data_fingerprint(spark, sf_dir, "lineitem"),
-    )
-    with _TRI_STAGE_LOCK:
-        hit = _TRI_STAGE_MEMO.pop(key, None)
-        if hit is not None:
-            _TRI_STAGE_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build(_key):
         e = _cooccurrence_edges(spark, sf_dir)
         eor, deg = orient_edges(e)
         deg = deg.persist()
         eor = eor.persist()
         n_edges = eor.count()  # materializer doubles as the tier gate
-        entry = (eor, deg, n_edges, e)
-        while len(_TRI_STAGE_MEMO) >= _FLAG_HIST_MAX:
-            # true LRU: evict the OLDEST entry (popitem() pops the
-            # newest — the _flag_cents_hist documented pitfall)
-            oldest = next(iter(_TRI_STAGE_MEMO))
-            old = _TRI_STAGE_MEMO.pop(oldest)
-            for f in old[:2]:
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass
-        _TRI_STAGE_MEMO[key] = entry
-        return entry
+        return (eor, deg, n_edges, e)
+
+    return _TRI_STAGE_MEMO.get(spark, sf_dir, "lineitem", build=build)
 
 
 def release_shared_histograms() -> None:
-    """Unpersist and forget every memoized shared stage (the per-flag
-    cents histograms, the co-occurrence edge frames/tables AND the
-    derived oriented-edge stage)."""
-    for memo in (_FLAG_CUM_MEMO, _FLAG_HIST_MEMO):
-        while memo:
-            _, old = memo.popitem()
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-    while _TRI_STAGE_MEMO:
-        _, old = _TRI_STAGE_MEMO.popitem()
-        for f in old[:2]:
-            try:
-                f.unpersist()
-            except Exception:
-                pass
-    while _ORDPART_MEMO:
-        _, old = _ORDPART_MEMO.popitem()
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    while _COOCC_MEMO:
-        _, old = _COOCC_MEMO.popitem()
-        _release_coocc_entry(old)
+    """Unpersist and forget every memoized lineitem shared stage (the
+    per-flag cents histograms, the co-occurrence edge frames/tables,
+    the (order, part) distinct AND the derived oriented-edge stage)."""
+    for memo in (_FLAG_CUM_MEMO, _FLAG_HIST_MEMO, _TRI_STAGE_MEMO,
+                 _ORDPART_MEMO, _COOCC_MEMO):
+        memo.release()
 
 
 def robust_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

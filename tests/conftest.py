@@ -9,6 +9,12 @@ from datetime import datetime
 
 import duckdb
 import pytest
+from hypothesis import settings
+
+# Property tests draw the same examples on every run: a pass/fail gate
+# must not depend on which inputs a random seed happens to produce.
+settings.register_profile("deterministic", derandomize=True)
+settings.load_profile("deterministic")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 

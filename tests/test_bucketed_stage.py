@@ -116,6 +116,8 @@ def test_stage_build_sweeps_orphaned_tables(spark, bucketed_gate):
     import os
     import time
 
+    from etl_python_sqlite_spark.operators import cache as C
+
     R = bucketed_gate
     orphan = "coocc_edges_deadbeef0000"
     fresh_peer = "coocc_edges_peer00000000"
@@ -129,10 +131,10 @@ def test_stage_build_sweeps_orphaned_tables(spark, bucketed_gate):
     # the peer table keeps its just-written mtime
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     odir = os.path.join(warehouse.removeprefix("file:"), orphan)
-    old = time.time() - (R._COOCC_ORPHAN_AGE_MS / 1000 + 3600)
+    old = time.time() - (C._STAGE_ORPHAN_AGE_MS / 1000 + 3600)
     os.utime(odir, (old, old))
     # force the once-per-app sweep to run again for this build
-    R._COOCC_SWEPT_APPS.clear()
+    C._SWEPT_STAGE_PREFIXES.clear()
     e = R._cooccurrence_edges(spark, SF_SMOKE)
     live = getattr(e, R._COOCC_TABLE_ATTR)
     assert not spark.catalog.tableExists(orphan)
@@ -142,11 +144,11 @@ def test_stage_build_sweeps_orphaned_tables(spark, bucketed_gate):
     # the sweep is once-per-application: a second build must not drop
     # the (now-live) stage table of a concurrent builder, and the
     # re-armed sweep must still respect the live-table registry
-    R._COOCC_SWEPT_APPS.clear()
-    R._COOCC_MEMO.clear()  # force a rebuild path through the sweep
+    C._SWEPT_STAGE_PREFIXES.clear()
+    R._COOCC_MEMO._entries.clear()  # force a rebuild path through the sweep
     e2 = R._cooccurrence_edges(spark, SF_SMOKE)
     assert spark.catalog.tableExists(getattr(e2, R._COOCC_TABLE_ATTR))
-    R._COOCC_LIVE_TABLES.discard(live)
+    C._LIVE_STAGE_TABLES.discard(live)
     spark.sql(f"DROP TABLE IF EXISTS {live}")
 
 
@@ -289,9 +291,8 @@ def test_lru_eviction_defers_table_drop_to_last_consumer(spark, minhash_gate):
     pairs = E._minhash_pairs(spark, SF_SMOKE)
     tbl = getattr(pairs, E._MINHASH_TABLE_ATTR)
     assert spark.catalog.tableExists(tbl)
-    # simulate the LRU eviction path: reference drop from the memo only
-    key = next(iter(E._MINHASH_MEMO))
-    evicted = E._MINHASH_MEMO.pop(key)
+    # the LRU eviction path: reference drop from the memo only
+    evicted = E._MINHASH_MEMO._evict_oldest()
     assert evicted is pairs
     assert spark.catalog.tableExists(tbl)  # consumer still holds it
     assert pairs.count() >= 0  # and can still execute

@@ -91,6 +91,20 @@ def test_fuzz_strict_int(spark, corpus):
         assert g == expected, repr(raw)
 
 
+def test_strict_int_rejects_information_separators(spark):
+    """``str.strip()`` removes \\x1c-\\x1f but ``int()`` rejects them, so
+    these must be NULL, not 0/0/12; the other whitespace still strips."""
+    cases = ["0\x1f", "0\x1c", "\x1e12", "\x1d", " 7\u3000", "\xa0-3\t"]
+    got = _batch_eval(spark, cases, strict_int("v", "long"))
+    assert got == [None, None, None, None, 7, -3]
+    for raw, g in zip(cases, got):
+        try:
+            expected = int(raw)
+        except ValueError:
+            expected = None
+        assert g == expected, repr(raw)
+
+
 def test_fuzz_sanitize(spark, corpus):
     strings, _ = corpus
     got = _batch_eval(spark, strings, sanitize_token("v"))

@@ -154,10 +154,11 @@ def test_quality_sample_is_one_aggregation_pass(spark):
     from etl_python_sqlite_spark.plans import ext as E
 
     plan = _plan(spark, E.ext_quality_sample(spark, SF_SMOKE), "simple")
-    # ≤3: agg exchange + sort, plus the r12-s4 _docs_spread repartition
-    # (gated on row-group count — absent at warehouse layouts, where the
-    # plan is the original one-agg-pass shape; measured 1.30× at sf0.1)
-    assert plan.count("Exchange") <= 3, plan
+    # agg exchange + sort; the r12-s4 _docs_spread repartition adds one
+    # more only while its row-group gate is open (measured 1.30× at
+    # sf0.1) — at warehouse layouts the plan is the one-agg-pass shape
+    bound = 3 if E._scan_underparallel(spark, SF_SMOKE) else 2
+    assert plan.count("Exchange") <= bound, plan
     assert "Join" not in plan, plan
 
 
