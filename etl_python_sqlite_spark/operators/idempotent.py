@@ -44,7 +44,10 @@ def read_or_empty(
     """Read a parquet 'table' directory, or an empty frame if absent."""
     if _exists(path):
         return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
+    # an RDD with no partitions: actions on it run no task, where
+    # createDataFrame([], schema) scans a PythonRDD that forks Python
+    # workers on every action
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
 def _exists(path: str) -> bool:
@@ -56,22 +59,36 @@ def _exists(path: str) -> bool:
 def assign_ids(
     df: DataFrame,
     id_col: str,
-    start: int = 1,
     order_by: list[str] | None = None,
     contiguous: bool = True,
+    after: DataFrame | None = None,
 ) -> DataFrame:
-    """Attach surrogate ids ``start, start+1, …`` to ``df``.
+    """Attach surrogate ids ``1, 2, …`` to ``df`` — or, given ``after`` (a
+    table holding ``id_col``), ids continuing past its max ``id_col``.
 
     contiguous=True  → deterministic dense ids via a global-order window
                        (single task — use for dims / bounded batches; this
                        is AUTOINCREMENT parity).
-    contiguous=False → ``monotonically_increasing_id()`` offset by
-                       ``start`` — parallel, unique, NOT dense (scale mode).
+    contiguous=False → ``monotonically_increasing_id()`` based — parallel,
+                       unique, NOT dense (scale mode).
+
+    The max of ``after`` is a one-row aggregate broadcast into this plan:
+    the action that consumes the ids computes it, with no driver round
+    trip of its own.
     """
     if contiguous:
         w = Window.orderBy(*(order_by or df.columns))
-        return df.withColumn(id_col, (F.row_number().over(w) + start - 1).cast("long"))
-    return df.withColumn(id_col, (F.monotonically_increasing_id() + start).cast("long"))
+        ids = df.withColumn(id_col, F.row_number().over(w))
+    else:
+        ids = df.withColumn(id_col, F.monotonically_increasing_id() + 1)
+    if after is not None:
+        base = after.agg(F.coalesce(F.max(id_col), F.lit(0)).alias("_id_base"))
+        ids = (
+            ids.crossJoin(F.broadcast(base))
+            .withColumn(id_col, F.col(id_col) + F.col("_id_base"))
+            .drop("_id_base")
+        )
+    return ids.withColumn(id_col, F.col(id_col).cast("long"))
 
 
 @dataclass
@@ -95,8 +112,8 @@ def idempotent_append(
     keys: list[str],
     target_schema: T.StructType | None = None,
     id_col: str | None = None,
-    id_start: int | None = None,
     group_col: str | None = None,
+    attempted: int | None = None,
 ) -> AppendResult:
     """INSERT OR IGNORE semantics onto a parquet table.
 
@@ -104,7 +121,9 @@ def idempotent_append(
     2. cross-run dedup: left-anti join against existing target keys;
     3. surrogate ids assigned AFTER dedup when ``id_col`` is given —
        SQLite does not consume rowids for IGNOREd inserts, so ids stay
-       dense across re-runs only if assigned to genuinely-new rows;
+       dense across re-runs only if assigned to genuinely-new rows. They
+       continue after the target's max ``id_col``, computed inside the
+       write plan (``assign_ids(after=)``);
     4. append only genuinely new rows;
     5. metrics from the anti-join count — the reference derives
        inserted/ignored from before/after COUNT(*) (scr/etl_batch.py:150-154)
@@ -118,10 +137,13 @@ def idempotent_append(
     the reference's sorted per-file processing order (a key seen in file A
     then file B inserts from A, ignores in B); plain ``dropDuplicates``
     would pick an arbitrary winner.
+
+    ``attempted``, when the caller already knows ``batch.count()``, saves
+    that job.
     """
     schema = target_schema or batch.drop(*([group_col] if group_col else [])).schema
-    existing_keys = (
-        spark.read.schema(schema).parquet(target_path).select(*keys)
+    existing = (
+        spark.read.schema(schema).parquet(target_path)
         if _exists(target_path)
         else None
     )
@@ -130,25 +152,27 @@ def idempotent_append(
         out.write.mode("append").parquet(target_path)
 
     return _append_with_accounting(
-        batch, keys, existing_keys, schema, id_col, id_start, group_col,
-        _write, target_path,
+        batch, keys, existing, schema, id_col, group_col,
+        _write, target_path, attempted,
     )
 
 
 def _append_with_accounting(
     batch: DataFrame,
     keys: list[str],
-    existing_keys: DataFrame | None,
+    existing: DataFrame | None,
     schema: T.StructType,
     id_col: str | None,
-    id_start: int | None,
     group_col: str | None,
     write_fn,
     target_label: str,
+    attempted: int | None,
 ) -> AppendResult:
     """Shared INSERT OR IGNORE core: in-batch dedup → anti-join vs target
-    keys → per-group accounting → id assignment → schema-cast write."""
-    attempted = batch.count()
+    keys → per-group accounting → id assignment → schema-cast write.
+    ``existing`` is the target table, None when it does not exist yet."""
+    if attempted is None:
+        attempted = batch.count()
     if group_col is None:
         deduped = batch.dropDuplicates(keys)
     else:
@@ -159,8 +183,8 @@ def _append_with_accounting(
             .drop("_rn")
         )
 
-    if existing_keys is not None:
-        new_rows = deduped.join(existing_keys, on=keys, how="left_anti")
+    if existing is not None:
+        new_rows = deduped.join(existing.select(*keys), on=keys, how="left_anti")
     else:
         new_rows = deduped
 
@@ -198,7 +222,7 @@ def _append_with_accounting(
         if inserted:
             out = new_rows.drop(group_col) if group_col else new_rows
             if id_col is not None:
-                out = assign_ids(out, id_col, start=id_start or 1, order_by=keys)
+                out = assign_ids(out, id_col, order_by=keys, after=existing)
             write_fn(
                 out.select([F.col(f.name).cast(f.dataType) for f in schema.fields])
             )
@@ -237,20 +261,19 @@ def upsert_dimension(
             T.StructField(natural_key, T.StringType(), False),
         ]
     )
-    dim = read_or_empty(spark, dim_path, dim_schema)
+    dim = spark.read.schema(dim_schema).parquet(dim_path) if _exists(dim_path) else None
 
-    batch_keys = values.select(F.col(natural_key)).where(
+    new_keys = values.select(F.col(natural_key)).where(
         F.col(natural_key).isNotNull()
     ).distinct()
-    new_keys = batch_keys.join(dim.select(natural_key), on=natural_key, how="left_anti")
+    if dim is not None:
+        new_keys = new_keys.join(dim.select(natural_key), on=natural_key, how="left_anti")
 
     new_keys = new_keys.persist()
     try:
-        n_new = new_keys.count()
-        if n_new:
-            start = (dim.agg(F.max(surrogate_key)).first()[0] or 0) + 1
+        if new_keys.count():
             new_rows = assign_ids(
-                new_keys, surrogate_key, start=start, order_by=[natural_key]
+                new_keys, surrogate_key, order_by=[natural_key], after=dim
             ).select(surrogate_key, natural_key)
             new_rows.write.mode("append").parquet(dim_path)
     finally:
@@ -269,8 +292,8 @@ def idempotent_append_bucketed(
     buckets: int = 16,
     target_schema: T.StructType | None = None,
     id_col: str | None = None,
-    id_start: int | None = None,
     group_col: str | None = None,
+    attempted: int | None = None,
 ) -> AppendResult:
     """Scale-path INSERT OR IGNORE onto a catalog table bucketed by the
     natural key — full drop-in for :func:`idempotent_append` (same id
@@ -285,10 +308,8 @@ def idempotent_append_bucketed(
     re-shuffling the target per batch would dominate.
     """
     schema = target_schema or batch.drop(*([group_col] if group_col else [])).schema
-    existing_keys = (
-        spark.table(table_name).select(*keys)
-        if spark.catalog.tableExists(table_name)
-        else None
+    existing = (
+        spark.table(table_name) if spark.catalog.tableExists(table_name) else None
     )
 
     def _write(out: DataFrame) -> None:
@@ -300,6 +321,6 @@ def idempotent_append_bucketed(
         )
 
     return _append_with_accounting(
-        batch, keys, existing_keys, schema, id_col, id_start, group_col,
-        _write, table_name,
+        batch, keys, existing, schema, id_col, group_col,
+        _write, table_name, attempted,
     )

@@ -120,17 +120,12 @@ def annotate_rejections(
     )
 
 
-def transform_with_rejections(
-    raw: DataFrame,
-    edad_min: int = 25,
-    message_style: str = "relational",
-) -> tuple[DataFrame, DataFrame]:
-    """Split ``raw`` into (valid, rejects) — reference scr/etl_batch.py:42-69.
+def split_rejections(annotated: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split an ``annotate_rejections`` frame into (valid, rejects).
 
     valid:   ``nombre, edad, ciudad`` — normalized, typed (int edad).
     rejects: original raw string columns + ``motivo``.
     """
-    annotated = annotate_rejections(raw, edad_min=edad_min, message_style=message_style)
     valid = (
         annotated.filter(F.col("motivo").isNull())
         .select(
@@ -145,3 +140,15 @@ def transform_with_rejections(
         .select(*[F.coalesce(F.col(c), F.lit("")).alias(c) for c in raw_cols], "motivo")
     )
     return valid, rejects
+
+
+def transform_with_rejections(
+    raw: DataFrame,
+    edad_min: int = 25,
+    message_style: str = "relational",
+) -> tuple[DataFrame, DataFrame]:
+    """Split ``raw`` into (valid, rejects) — reference scr/etl_batch.py:42-69;
+    see ``split_rejections`` for the two frames."""
+    return split_rejections(
+        annotate_rejections(raw, edad_min=edad_min, message_style=message_style)
+    )

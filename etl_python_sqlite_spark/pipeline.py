@@ -24,6 +24,18 @@ contract is one row per (run, file) with its own run_id
 distributed; at scale you raise throughput by processing files into one
 combined read with ``read_csv_directory`` + groupBy(source_file) for
 metrics — provided as ``run_directory_combined``.
+
+Per-file cost: the loop's wall is the fixed cost of each Spark action, so
+``run_batch`` runs only the jobs a file needs. The header is read on the
+driver, one scan fills a persisted annotated frame, and one aggregate over
+it gives the valid and reject counts. A file without valid rows (no
+``ciudad`` column, all rejects, header only) then writes its reject CSV
+and audit row: 5 jobs. A file with valid rows adds the dim upsert, key
+resolution and fact append, whose surrogate-id bases are broadcast
+aggregates inside their write plans: 15-19 jobs, since AQE runs each
+shuffle and broadcast stage as a job of its own. The benchmark's
+``etl_files`` drops average 11 jobs per file. No action on this path
+starts a Python worker (CLAUDE.md: no Python-list ``createDataFrame``).
 """
 
 from __future__ import annotations
@@ -31,6 +43,7 @@ from __future__ import annotations
 import shutil
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,7 +55,11 @@ from etl_python_sqlite_spark.operators.idempotent import (
     read_or_empty,
     upsert_dimension,
 )
-from etl_python_sqlite_spark.operators.transform import transform_with_rejections
+from etl_python_sqlite_spark.operators.transform import (
+    annotate_rejections,
+    split_rejections,
+    transform_with_rejections,  # noqa: F401  (re-exported public name)
+)
 from etl_python_sqlite_spark.sources.csv import list_csv_files, read_csv_all_string
 
 FACT_SCHEMA = T.StructType(
@@ -119,23 +136,16 @@ class PipelineConfig:
         return str(Path(self.warehouse) / "etl_runs")
 
 
-def read_fact(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """The accumulated fact table under either warehouse layout."""
-    if cfg.fact_table is not None:
-        if spark.catalog.tableExists(cfg.fact_table):
-            return spark.table(cfg.fact_table)
-        return spark.createDataFrame([], FACT_SCHEMA)
-    return read_or_empty(spark, cfg.fact_path, FACT_SCHEMA)
-
-
 def _append_fact(
     spark: SparkSession,
     cfg: PipelineConfig,
     batch: DataFrame,
-    id_start: int,
     group_col: str | None = None,
+    attempted: int | None = None,
 ):
-    """Route a fact batch to the configured warehouse layout."""
+    """Route a fact batch to the configured warehouse layout. persona_id
+    continues after the fact's max (AUTOINCREMENT parity), computed inside
+    the append's write plan."""
     if cfg.fact_table is not None:
         from etl_python_sqlite_spark.operators.idempotent import (
             idempotent_append_bucketed,
@@ -149,8 +159,8 @@ def _append_fact(
             buckets=cfg.fact_buckets,
             target_schema=FACT_SCHEMA,
             id_col="persona_id",
-            id_start=id_start,
             group_col=group_col,
+            attempted=attempted,
         )
     return idempotent_append(
         spark,
@@ -159,8 +169,8 @@ def _append_fact(
         FACT_NATURAL_KEY,
         target_schema=FACT_SCHEMA,
         id_col="persona_id",
-        id_start=id_start,
         group_col=group_col,
+        attempted=attempted,
     )
 
 
@@ -179,17 +189,17 @@ class BatchResult:
     files: list[FileRunResult] = field(default_factory=list)
 
 
-def write_rejects_csv(rejects: DataFrame, out_path: str | Path) -> int:
+def write_rejects_csv(rejects: DataFrame, out_path: str | Path, count: int) -> None:
     """Reject sink: header CSV, raw columns + motivo — reference
-    scr/etl_relational.py:97-102. Returns reject count.
+    scr/etl_relational.py:97-102. ``count`` is the number of rejects, which
+    the caller knows from its counting aggregate; no file when it is 0.
 
     Written as a single CSV file (coalesce(1)) for reference parity —
     rejects are a small fraction by contract; at scale drop the coalesce
     and write a directory.
     """
-    n = rejects.count()
-    if not n:
-        return 0
+    if not count:
+        return
     tmp = str(out_path) + "._spark_tmp"
     (
         rejects.coalesce(1)
@@ -205,7 +215,6 @@ def write_rejects_csv(rejects: DataFrame, out_path: str | Path) -> int:
     Path(out_path).parent.mkdir(parents=True, exist_ok=True)
     shutil.move(str(part), str(out_path))
     shutil.rmtree(tmp)
-    return n
 
 
 def write_rejects_csv_by_file(
@@ -243,24 +252,38 @@ def write_rejects_csv_by_file(
     return counts
 
 
+def _one_row(spark: SparkSession, schema: T.StructType, values: tuple) -> DataFrame:
+    """A one-row frame of literals over a one-partition Range: planned and
+    run in the JVM. A Python-list ``createDataFrame`` would scan a PythonRDD
+    and fork Python workers on every action."""
+    return spark.range(0, 1, 1, 1).select(
+        *[F.lit(v).cast(f.dataType).alias(f.name) for f, v in zip(schema.fields, values)]
+    )
+
+
 def load_file(
     spark: SparkSession,
     cfg: PipelineConfig,
     valid: DataFrame,
     source_file: str,
+    valid_count: int,
     rejected_count: int,
     now: datetime | None = None,
 ) -> FileRunResult:
     """Load one file's valid rows — reference ``load_batch``
-    (scr/etl_batch.py:123-168), set-based."""
+    (scr/etl_batch.py:123-168), set-based.
+
+    ``valid`` (``valid_count`` rows) should be cheap to re-read, such as a
+    filter of a persisted frame: the dim upsert, the key resolution and the
+    append each read it. A file with no valid rows runs no dim, id or fact
+    job, only its audit row.
+    """
     run_id = make_run_id(source_file, now)
     started_at = (now or datetime.now(timezone.utc)).isoformat()
     processed_at = started_at
 
-    valid = valid.persist()
-    try:
-        valid_count = valid.count()
-
+    inserted = ignored = 0
+    if valid_count:
         # dimension upsert (set-based J3) + broadcast key resolution
         dim = upsert_dimension(
             spark, valid.select(F.col("ciudad").alias("nombre")), cfg.dim_path
@@ -270,44 +293,27 @@ def load_file(
         ).select(
             valid.nombre, valid.edad.cast("int").alias("edad"), dim.ciudad_id
         )
-
-        # surrogate persona_id start: AUTOINCREMENT parity — max existing + 1;
-        # ids are assigned inside idempotent_append AFTER the anti-join so
-        # IGNOREd duplicates don't consume ids (dense like SQLite)
-        existing = read_fact(spark, cfg)
-        start = (existing.agg(F.max("persona_id")).first()[0] or 0) + 1
         batch = (
             resolved.withColumn("processed_at", F.lit(processed_at))
             .withColumn("run_id", F.lit(run_id))
         )
+        # every valid row resolves its city, so the batch has valid_count
+        # rows; persona_id is assigned AFTER the anti-join so IGNOREd
+        # duplicates don't consume ids (dense like SQLite AUTOINCREMENT)
+        res = _append_fact(spark, cfg, batch, attempted=valid_count)
+        inserted, ignored = res.inserted_new, res.ignored_duplicates
 
-        res = _append_fact(spark, cfg, batch, id_start=start)
-
-        audit_row = spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    started_at,
-                    source_file,
-                    valid_count,
-                    rejected_count,
-                    res.inserted_new,
-                    res.ignored_duplicates,
-                )
-            ],
-            AUDIT_SCHEMA,
-        )
-        audit_row.write.mode("append").parquet(cfg.audit_path)
-    finally:
-        valid.unpersist()
-
+    audit_row = (
+        run_id, started_at, source_file, valid_count, rejected_count, inserted, ignored,
+    )
+    _one_row(spark, AUDIT_SCHEMA, audit_row).write.mode("append").parquet(cfg.audit_path)
     return FileRunResult(
         source_file=source_file,
         run_id=run_id,
         valid_count=valid_count,
         rejected_count=rejected_count,
-        inserted_new=res.inserted_new,
-        ignored_duplicates=res.ignored_duplicates,
+        inserted_new=inserted,
+        ignored_duplicates=ignored,
     )
 
 
@@ -315,19 +321,32 @@ def run_batch(
     spark: SparkSession, cfg: PipelineConfig, now: datetime | None = None
 ) -> BatchResult:
     """Process every CSV in ``cfg.data_in`` — reference ``etl_batch.main()``
-    (scr/etl_batch.py:174-199)."""
+    (scr/etl_batch.py:174-199).
+
+    Per file: one CSV scan into a persisted annotated frame, whose one
+    aggregate gives the valid and reject counts, then only the writes the
+    file needs (job counts in the module docstring).
+    """
     result = BatchResult()
     for csv_file in list_csv_files(cfg.data_in):
         raw = read_csv_all_string(spark, csv_file)
-        valid, rejects = transform_with_rejections(
+        ann = annotate_rejections(
             raw, edad_min=cfg.edad_min, message_style=cfg.message_style
-        )
-        n_rejects = write_rejects_csv(
-            rejects, Path(cfg.data_rejected) / f"rejected_{csv_file.name}"
-        )
-        result.files.append(
-            load_file(spark, cfg, valid, csv_file.name, n_rejects, now=now)
-        )
+        ).persist()
+        try:
+            n_valid, n_rejects = ann.agg(
+                F.count(F.when(F.col("motivo").isNull(), 1)),
+                F.count("motivo"),
+            ).first()
+            valid, rejects = split_rejections(ann)
+            write_rejects_csv(
+                rejects, Path(cfg.data_rejected) / f"rejected_{csv_file.name}", n_rejects
+            )
+            result.files.append(
+                load_file(spark, cfg, valid, csv_file.name, n_valid, n_rejects, now=now)
+            )
+        finally:
+            ann.unpersist()
     return result
 
 
@@ -387,36 +406,37 @@ def run_directory_combined(
     Returns the audit DataFrame that was appended.
 
     Audit parity with the per-file loop: rejects are routed to one
-    ``rejected_<file>.csv`` per source file (single partitioned write),
-    and ``inserted_new`` / ``ignored_duplicates`` are computed PER FILE
-    from the anti-join survivors (``idempotent_append(group_col=...)``),
-    not stamped batch-global onto every row.
+    ``rejected_<file>.csv`` per source file (one partitioned write per
+    distinct header, so each reject file keeps its own columns), and
+    ``inserted_new`` / ``ignored_duplicates`` are computed PER FILE from
+    the anti-join survivors (``idempotent_append(group_col=...)``), not
+    stamped batch-global onto every row.
     """
-    from etl_python_sqlite_spark.operators.transform import annotate_rejections
     from etl_python_sqlite_spark.sources.csv import read_csv_directory
 
-    raw = read_csv_directory(spark, str(Path(cfg.data_in) / "*.csv"))
     ts = (now or datetime.now(timezone.utc)).strftime("%Y%m%dT%H%M%S%fZ")
     started_at = (now or datetime.now(timezone.utc)).isoformat()
 
-    # the cascade runs with source_file carried through row-wise, so one
-    # scan feeds the load, the reject sink and the per-file audit metrics;
-    # persist: three consumers, one materialization
-    ann = annotate_rejections(
-        raw, edad_min=cfg.edad_min, message_style=cfg.message_style
-    ).persist()
+    # one scan per distinct header, each binding columns by its own header
+    # and tagging its own missing required columns; the cascade carries
+    # source_file row-wise, so each scan feeds the load, the reject sink
+    # and the per-file audit metrics — persist: one materialization each
+    groups = [
+        annotate_rejections(
+            raw, edad_min=cfg.edad_min, message_style=cfg.message_style
+        ).persist()
+        for raw in read_csv_directory(spark, list_csv_files(cfg.data_in))
+    ]
+    if not groups:
+        return read_or_empty(spark, cfg.audit_path, AUDIT_SCHEMA)
     try:
-        raw_cols = [
-            c
-            for c in ann.columns
-            if c not in ("motivo", "nombre_norm", "ciudad_norm", "edad_int", "source_file")
-        ]
-        rejects = ann.filter(F.col("motivo").isNotNull()).select(
-            *[F.coalesce(F.col(c), F.lit("")).alias(c) for c in raw_cols],
-            "motivo",
-            "source_file",
+        for g in groups:
+            write_rejects_csv_by_file(split_rejections(g)[1], cfg.data_rejected)
+        ann = reduce(
+            DataFrame.unionByName,
+            (g.select("source_file", "motivo", "nombre_norm", "ciudad_norm", "edad_int")
+             for g in groups),
         )
-        write_rejects_csv_by_file(rejects, cfg.data_rejected)
 
         valid = ann.filter(F.col("motivo").isNull())
         dim = upsert_dimension(
@@ -428,8 +448,6 @@ def run_directory_combined(
             "ciudad_id",
             "source_file",
         )
-        existing = read_fact(spark, cfg)
-        start = (existing.agg(F.max("persona_id")).first()[0] or 0) + 1
         batch = (
             resolved.withColumn("processed_at", F.lit(started_at))
             .withColumn(
@@ -440,7 +458,7 @@ def run_directory_combined(
                 ),
             )
         )
-        res = _append_fact(spark, cfg, batch, id_start=start, group_col="source_file")
+        res = _append_fact(spark, cfg, batch, group_col="source_file")
 
         # per_group is already a tiny DISTRIBUTED frame — join it straight
         # into the audit, no driver round trip
@@ -473,5 +491,6 @@ def run_directory_combined(
         )
         audit.write.mode("append").parquet(cfg.audit_path)
     finally:
-        ann.unpersist()
+        for g in groups:
+            g.unpersist()
     return spark.read.schema(AUDIT_SCHEMA).parquet(cfg.audit_path)

@@ -35,6 +35,7 @@ from etl_python_sqlite_spark.pipeline import (
     FACT_SCHEMA,
     PipelineConfig,
 )
+from etl_python_sqlite_spark.sources.csv import source_file_name
 
 RAW_CSV_SCHEMA = T.StructType(
     [
@@ -54,9 +55,7 @@ def stream_raw_csv(spark: SparkSession, data_in: str) -> DataFrame:
         .option("header", True)
         .option("maxFilesPerTrigger", 16)
         .csv(data_in)
-        .withColumn(
-            "source_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
+        .withColumn("source_file", source_file_name())
     )
 
 
@@ -72,7 +71,6 @@ def process_microbatch(
     replay: a re-delivered file inserts 0 new fact rows."""
     from etl_python_sqlite_spark.operators.idempotent import (
         idempotent_append,
-        read_or_empty,
         upsert_dimension,
     )
     from etl_python_sqlite_spark.pipeline import write_rejects_csv_by_file
@@ -112,8 +110,6 @@ def process_microbatch(
             "ciudad_id",
             "source_file",
         )
-        existing = read_or_empty(spark, cfg.fact_path, FACT_SCHEMA)
-        start = (existing.agg(F.max("persona_id")).first()[0] or 0) + 1
         run_id_col = F.concat(
             F.lit(ts + "_"), F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_")
         )
@@ -122,7 +118,8 @@ def process_microbatch(
         )
         # group_col threads source_file through the anti-join so each
         # (run, file) audit row carries ITS OWN inserted/ignored counts,
-        # not microbatch-global ones (the per-(run,file) audit contract)
+        # not microbatch-global ones (the per-(run,file) audit contract);
+        # persona_id continues after the fact's max, inside the write plan
         res = idempotent_append(
             spark,
             batch,
@@ -130,7 +127,6 @@ def process_microbatch(
             FACT_NATURAL_KEY,
             target_schema=FACT_SCHEMA,
             id_col="persona_id",
-            id_start=start,
             group_col="source_file",
         )
 

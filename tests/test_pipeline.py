@@ -99,7 +99,6 @@ def test_batch_end_to_end(spark, cfg):
     assert audit["b_clean.csv"]["ignored_duplicates"] == 1
 
 
-@pytest.mark.slow  # >8 s e2e/fuzz (default tier deselects)
 def test_rerun_is_idempotent(spark, cfg):
     run_batch(spark, cfg, now=NOW)
     result2 = run_batch(spark, cfg, now=NOW)
@@ -175,7 +174,6 @@ def test_combined_directory_run_matches_per_file(spark, cfg, tmp_path):
     assert naomi["nombre"] == "Naomi " and naomi["ciudad"] == " san juan"
 
 
-@pytest.mark.slow  # >8 s e2e/fuzz (default tier deselects)
 def test_bucketed_warehouse_run_batch_parity(spark, tmp_path):
     """fact_table set → the warehouse default is the bucketed catalog
     layout: same end state and audit metrics as the path layout, and the
@@ -298,3 +296,139 @@ def test_cli_main_end_to_end(spark, tmp_path):
     assert rc == 0
     out = spark.read.parquet(str(tmp_path / "wh" / "personas_limpias"))
     assert out.count() == 1  # only ana survives (bob underage, carla bad int)
+
+
+# ---------------------------------------------------------------------------
+# Cost model of run_batch: Spark jobs per file, no Python workers
+# ---------------------------------------------------------------------------
+
+#: Spark jobs of a warm two-file drop (one regular file, one without
+#: ``ciudad``) re-delivered into an existing warehouse, at the test
+#: session's settings; AQE runs each shuffle and broadcast stage as a job
+#: of its own. The per-action loop this replaced ran 42.
+TWO_FILE_DROP_JOBS = 20
+
+
+def _jobs_of(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs (status tracker; works with the
+    UI off)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _two_file_drop(data_in: Path) -> None:
+    _write_csv(data_in / "a_dirty.csv", DIRTY)
+    _write_csv(data_in / "b_sin_ciudad.csv", [["nombre", "edad"], ["Bruno", "33"], ["Eva", "40"]])
+
+
+def test_warm_two_file_drop_job_budget(spark, tmp_path):
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rej"),
+        warehouse=str(tmp_path / "wh"),
+    )
+    _two_file_drop(Path(cfg.data_in))
+    run_batch(spark, cfg, now=NOW)  # warm-up; creates the warehouse
+    assert _jobs_of(spark, lambda: run_batch(spark, cfg, now=NOW)) <= TWO_FILE_DROP_JOBS
+
+
+def test_zero_valid_files_add_no_warehouse_parts(spark, tmp_path):
+    """A file without valid rows (no ``ciudad`` column, all rejects, header
+    only) writes its audit row and rejects, and no dim or fact file."""
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rej"),
+        warehouse=str(tmp_path / "wh"),
+    )
+    _write_csv(Path(cfg.data_in) / "a_dirty.csv", DIRTY)
+    run_batch(spark, cfg, now=NOW)
+
+    def parts():
+        return sorted(
+            str(p) for d in (cfg.dim_path, cfg.fact_path) for p in Path(d).glob("part-*")
+        )
+
+    before = parts()
+    cfg.data_in = str(tmp_path / "in2")
+    _write_csv(Path(cfg.data_in) / "b_sin_ciudad.csv", [["nombre", "edad"], ["Bruno", "33"]])
+    _write_csv(Path(cfg.data_in) / "c_allbad.csv", [["nombre", "edad", "ciudad"], ["A", "x", "Lima"]])
+    _write_csv(Path(cfg.data_in) / "d_empty.csv", [["nombre", "edad", "ciudad"]])
+    result = run_batch(spark, cfg, now=NOW)
+    assert [(r.valid_count, r.rejected_count, r.inserted_new) for r in result.files] == [
+        (0, 1, 0), (0, 1, 0), (0, 0, 0),
+    ]
+    assert parts() == before
+    assert spark.read.parquet(cfg.audit_path).count() == 4
+
+
+def test_audit_row_frame_runs_in_the_jvm(spark):
+    """The per-file audit row is a JVM-planned one-row frame: a Python-list
+    ``createDataFrame`` scans an ExistingRDD over a PythonRDD, which forks
+    Python workers on every action."""
+    from etl_python_sqlite_spark.pipeline import _one_row
+
+    values = ("rid", "2024-06-01T12:00:00+00:00", "a b.csv", 3, 2, 1, 2)
+    df = _one_row(spark, AUDIT_SCHEMA, values)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert [f.dataType for f in df.schema.fields] == [f.dataType for f in AUDIT_SCHEMA.fields]
+    assert df.columns == AUDIT_SCHEMA.fieldNames()
+    assert tuple(df.first()) == values
+
+
+def test_combined_run_matches_per_file_on_mixed_headers(spark, tmp_path):
+    """run_directory_combined over a reordered header and a larger file
+    without ``ciudad``, under names that need URI escaping: the same audit
+    metrics, reject files and facts as run_batch."""
+    data_in = tmp_path / "in"
+    reordered = [[c, e, n] for n, e, c in DIRTY]  # ciudad, edad, nombre
+    _write_csv(data_in / "a reordered+1%.csv", reordered)
+    _write_csv(
+        data_in / "b_sin_ciudad_\u00f1.csv",
+        [["nombre", "edad"]] + [[f"P{i}", str(30 + i)] for i in range(40)],
+    )
+
+    def run(fn, name):
+        cfg = PipelineConfig(
+            data_in=str(data_in),
+            data_rejected=str(tmp_path / f"rej_{name}"),
+            warehouse=str(tmp_path / f"wh_{name}"),
+        )
+        fn(spark, cfg, now=NOW)
+        audit = {
+            r["source_file"]: (
+                r["valid_count"], r["rejected_count"], r["inserted_new"], r["ignored_duplicates"],
+            )
+            for r in spark.read.parquet(cfg.audit_path).collect()
+        }
+        rejects = {}
+        for p in Path(cfg.data_rejected).glob("rejected_*.csv"):
+            with p.open(newline="", encoding="utf-8") as f:
+                rows = list(csv.reader(f))
+            rejects[p.name] = (rows[0], sorted(map(tuple, rows[1:])))
+        fact = sorted(
+            (r["nombre"], r["edad"]) for r in spark.read.parquet(cfg.fact_path).collect()
+        )
+        return audit, rejects, fact
+
+    batch = run(run_batch, "batch")
+    combined = run(run_directory_combined, "combined")
+    assert combined == batch
+    audit, rejects, fact = batch
+    assert audit == {
+        "a reordered+1%.csv": (3, 2, 3, 0),
+        "b_sin_ciudad_\u00f1.csv": (0, 40, 0, 0),
+    }
+    assert set(rejects) == {"rejected_a reordered+1%.csv", "rejected_b_sin_ciudad_\u00f1.csv"}
+    assert rejects["rejected_a reordered+1%.csv"][0] == ["ciudad", "edad", "nombre", "motivo"]
+    assert fact == [("Guillermo", 26), ("Noemi", 52), ("Sofia", 29)]

@@ -116,7 +116,6 @@ SIN_CIUDAD = [
 ]
 
 
-@pytest.mark.slow  # >8 s e2e/fuzz (default tier deselects)
 def test_etl_batch_message_style_byte_parity(spark, tmp_path):
     """Replay scr/etl_batch.py:42-69 fixtures with message_style="batch"
     and assert the EXACT ``motivo`` strings that script emits: its single
