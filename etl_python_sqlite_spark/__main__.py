@@ -42,18 +42,14 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from etl_python_sqlite_spark.pipeline import PipelineConfig, run_batch
+    from etl_python_sqlite_spark.session import get_spark
 
-    # getOrCreate joins an already-active session (embedding callers,
-    # tests); only stop what we actually created
+    # get_spark joins an already-active session (embedding callers, tests);
+    # only stop what we actually created
     owns_session = SparkSession.getActiveSession() is None
-    spark = (
-        SparkSession.builder.appName("etl_python_sqlite_spark")
-        .master(args.master)
-        .config("spark.sql.shuffle.partitions", args.shuffle_partitions)
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_spark(
+        master=args.master, shuffle_partitions=int(args.shuffle_partitions)
     )
-    spark.sparkContext.setLogLevel("WARN")
     try:
         cfg = PipelineConfig(
             data_in=args.data_in,

@@ -43,6 +43,7 @@ bucketed catalog tables through :func:`bucketed_stage_table`.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import threading
 import time
 import weakref
@@ -166,6 +167,8 @@ STAGE_TABLE_ATTR = "_spark_graft_stage_table"
 #: Stage tables this process created and has not dropped yet: the sweep
 #: below never touches them.
 _LIVE_STAGE_TABLES: set = set()
+#: Per-process build counter in stage table names.
+_STAGE_BUILDS = itertools.count(1)
 #: (applicationId, prefix) pairs whose orphan sweep already ran.
 _SWEPT_STAGE_PREFIXES: set = set()
 #: A stage table is built and consumed within one bench/probe run
@@ -230,14 +233,20 @@ def bucketed_stage_table(
 ) -> DataFrame:
     """Materialize a data-sized shared stage as a catalog table bucketed
     (and sorted) on ``sort_by[0]``, named ``prefix`` + a hash of its
-    memo ``key``, and return the table-backed handle — ``view`` of the
-    table scan when given. The handle carries the table name under
-    ``STAGE_TABLE_ATTR``, and its :func:`tie_stage_table` finalizer
-    drops the table once the last consumer lets go. The first build of
-    each prefix per application sweeps orphaned tables first."""
+    memo ``key`` + a build number, and return the table-backed handle —
+    ``view`` of the table scan when given. The handle carries the table
+    name under ``STAGE_TABLE_ATTR``, and its :func:`tie_stage_table`
+    finalizer drops the table once the last consumer lets go. The build
+    number keeps a rebuild of an evicted key off the table a live handle
+    of the earlier build still scans (and that handle's finalizer off the
+    new table). The first build of each prefix per application sweeps
+    orphaned tables first."""
     spark = frame.sparkSession
     _sweep_stale_stage_tables(spark, prefix)
-    tbl = prefix + hashlib.md5(repr(key).encode()).hexdigest()[:12]
+    tbl = (
+        f"{prefix}{hashlib.md5(repr(key).encode()).hexdigest()[:12]}"
+        f"_{next(_STAGE_BUILDS)}"
+    )
     (
         frame.write.mode("overwrite")
         .bucketBy(buckets, sort_by[0])

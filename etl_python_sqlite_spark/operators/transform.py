@@ -120,10 +120,13 @@ def annotate_rejections(
     )
 
 
-def split_rejections(annotated: DataFrame) -> tuple[DataFrame, DataFrame]:
+def split_rejections(
+    annotated: DataFrame, keep: tuple[str, ...] = ()
+) -> tuple[DataFrame, DataFrame]:
     """Split an ``annotate_rejections`` frame into (valid, rejects).
 
-    valid:   ``nombre, edad, ciudad`` — normalized, typed (int edad).
+    valid:   ``nombre, edad, ciudad`` — normalized, typed (int edad) —
+             then the ``keep`` columns (e.g. ``source_file``) as they are.
     rejects: original raw string columns + ``motivo``.
     """
     valid = (
@@ -132,6 +135,7 @@ def split_rejections(annotated: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.col("nombre_norm").alias("nombre"),
             F.col("edad_int").alias("edad"),
             F.col("ciudad_norm").alias("ciudad"),
+            *keep,
         )
     )
     raw_cols = [c for c in annotated.columns if c not in ("motivo", "nombre_norm", "ciudad_norm", "edad_int")]

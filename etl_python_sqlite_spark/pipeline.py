@@ -18,12 +18,27 @@ Tables (warehouse_dir/):
     etl_runs/          run_id, started_at, source_file, valid_count,
                        rejected_count, inserted_new, ignored_duplicates
 
-The per-file driver loop is retained intentionally: the reference's audit
-contract is one row per (run, file) with its own run_id
-(scr/etl_batch.py:132,156-163). Each file's DAG is still fully
-distributed; at scale you raise throughput by processing files into one
-combined read with ``read_csv_directory`` + groupBy(source_file) for
-metrics — provided as ``run_directory_combined``.
+Three drivers share ONE load core (the load-and-audit end of the chain):
+
+* ``run_batch`` — the reference's per-file loop, one ``load_file`` per
+  file;
+* ``run_directory_combined`` — one scan per distinct header over a whole
+  directory;
+* ``streaming.pipeline.process_microbatch`` — whatever files arrived in a
+  micro-batch.
+
+The core has two levels. ``_load_valid`` is the single-batch load: dim
+upsert → broadcast city resolve → ``_append_fact``, the only route to the
+fact table. ``_load_files`` is the multi-file load the last two drivers
+call: per-file reject sink, union of the header groups, ``_load_valid``
+with ``group_col="source_file"``, and the per-file audit rows from one
+groupBy joined to the append's per-file counts.
+
+``run_batch`` keeps its loop rather than calling ``_load_files``: the
+reference's audit contract is one row per (run, file) with its own run_id
+and start time (scr/etl_batch.py:132,156-163), and the multi-file load's
+group-column window and per-file count checkpoint cost more jobs than
+dropping the loop saves on small files.
 
 Per-file cost: the loop's wall is the fixed cost of each Spark action, so
 ``run_batch`` runs only the jobs a file needs. The header is read on the
@@ -46,10 +61,11 @@ from datetime import datetime, timezone
 from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_python_sqlite_spark.functions.normalize import sanitize_token
 from etl_python_sqlite_spark.operators.idempotent import (
     idempotent_append,
     read_or_empty,
@@ -93,14 +109,22 @@ MIGRATION_BACKFILL_TS = "1970-01-01T00:00:00Z"
 MIGRATION_BACKFILL_RUN = "MIGRATION"
 
 
+def _run_stamp(now: datetime | None) -> str:
+    return (now or datetime.now(timezone.utc)).strftime("%Y%m%dT%H%M%S%fZ")
+
+
 def make_run_id(source_file: str, now: datetime | None = None) -> str:
     """UTC µs timestamp + sanitized filename — reference scr/etl_batch.py:24-28.
 
     ``now`` injectable for deterministic tests.
     """
-    ts = (now or datetime.now(timezone.utc)).strftime("%Y%m%dT%H%M%S%fZ")
     safe = "".join(ch if ch.isalnum() else "_" for ch in source_file)
-    return f"{ts}_{safe}"
+    return f"{_run_stamp(now)}_{safe}"
+
+
+def _run_id_col(now: datetime) -> Column:
+    """``make_run_id`` as a column over each row's ``source_file``."""
+    return F.concat(F.lit(_run_stamp(now) + "_"), sanitize_token("source_file"))
 
 
 @dataclass
@@ -219,17 +243,14 @@ def write_rejects_csv(rejects: DataFrame, out_path: str | Path, count: int) -> N
 
 def write_rejects_csv_by_file(
     rejects: DataFrame, out_dir: str | Path, file_col: str = "source_file"
-) -> dict[str, int]:
+) -> None:
     """Reject sink for combined multi-file runs: ONE partitioned write
     produces every per-file ``rejected_<name>.csv`` (vs a driver loop of
     N jobs). ``partitionBy`` routes each source file's rows to its own
     directory; ``repartition(file_col)`` guarantees exactly one part file
-    (hence exactly one CSV header) per source file. Returns per-file
-    reject counts.
+    (hence exactly one CSV header) per source file. A file without
+    rejects gets no directory, so no reject CSV, and needs no count.
     """
-    counts = {r[0]: r[1] for r in rejects.groupBy(file_col).count().collect()}
-    if not counts:
-        return {}
     out_dir = Path(out_dir)
     tmp = str(out_dir / "._spark_rejects_tmp")
     (
@@ -243,13 +264,11 @@ def write_rejects_csv_by_file(
     )
     from urllib.parse import unquote
 
-    out_dir.mkdir(parents=True, exist_ok=True)
     for d in Path(tmp).glob(f"{file_col}=*"):
         fname = unquote(d.name.split("=", 1)[1])
         part = next(d.glob("part-*.csv"))
         shutil.move(str(part), str(out_dir / f"rejected_{fname}"))
     shutil.rmtree(tmp)
-    return counts
 
 
 def _one_row(spark: SparkSession, schema: T.StructType, values: tuple) -> DataFrame:
@@ -259,6 +278,49 @@ def _one_row(spark: SparkSession, schema: T.StructType, values: tuple) -> DataFr
     return spark.range(0, 1, 1, 1).select(
         *[F.lit(v).cast(f.dataType).alias(f.name) for f, v in zip(schema.fields, values)]
     )
+
+
+def _load_valid(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    valid: DataFrame,
+    run_id: Column,
+    processed_at: str,
+    group_col: str | None = None,
+    attempted: int | None = None,
+):
+    """The single-batch load: dim upsert (set-based J3) → broadcast city
+    resolve → ``_append_fact``. ``valid`` holds ``nombre, edad, ciudad``
+    (``split_rejections``) plus ``group_col`` when given; ``attempted`` is
+    its row count when the caller knows it. Returns the AppendResult."""
+    dim = upsert_dimension(
+        spark, valid.select(F.col("ciudad").alias("nombre")), cfg.dim_path
+    )
+    resolved = valid.join(
+        F.broadcast(dim), valid.ciudad == dim.nombre, "inner"
+    ).select(
+        valid.nombre,
+        valid.edad.cast("int").alias("edad"),
+        dim.ciudad_id,
+        *([valid[group_col]] if group_col else []),
+    )
+    batch = (
+        resolved.withColumn("processed_at", F.lit(processed_at))
+        .withColumn("run_id", run_id)
+    )
+    # every valid row resolves its city, so the batch has ``attempted``
+    # rows; persona_id is assigned AFTER the anti-join so IGNOREd
+    # duplicates don't consume ids (dense like SQLite AUTOINCREMENT)
+    return _append_fact(spark, cfg, batch, group_col=group_col, attempted=attempted)
+
+
+def _valid_reject_counts() -> list[Column]:
+    """Valid and reject row counts of an annotated frame (``motivo`` NULL
+    = valid), for one aggregate."""
+    return [
+        F.count(F.when(F.col("motivo").isNull(), 1)).alias("valid_count"),
+        F.count("motivo").alias("rejected_count"),
+    ]
 
 
 def load_file(
@@ -278,29 +340,15 @@ def load_file(
     append each read it. A file with no valid rows runs no dim, id or fact
     job, only its audit row.
     """
+    now = now or datetime.now(timezone.utc)
     run_id = make_run_id(source_file, now)
-    started_at = (now or datetime.now(timezone.utc)).isoformat()
-    processed_at = started_at
+    started_at = now.isoformat()
 
     inserted = ignored = 0
     if valid_count:
-        # dimension upsert (set-based J3) + broadcast key resolution
-        dim = upsert_dimension(
-            spark, valid.select(F.col("ciudad").alias("nombre")), cfg.dim_path
+        res = _load_valid(
+            spark, cfg, valid, F.lit(run_id), started_at, attempted=valid_count
         )
-        resolved = valid.join(
-            F.broadcast(dim), valid.ciudad == dim.nombre, "inner"
-        ).select(
-            valid.nombre, valid.edad.cast("int").alias("edad"), dim.ciudad_id
-        )
-        batch = (
-            resolved.withColumn("processed_at", F.lit(processed_at))
-            .withColumn("run_id", F.lit(run_id))
-        )
-        # every valid row resolves its city, so the batch has valid_count
-        # rows; persona_id is assigned AFTER the anti-join so IGNOREd
-        # duplicates don't consume ids (dense like SQLite AUTOINCREMENT)
-        res = _append_fact(spark, cfg, batch, attempted=valid_count)
         inserted, ignored = res.inserted_new, res.ignored_duplicates
 
     audit_row = (
@@ -334,10 +382,7 @@ def run_batch(
             raw, edad_min=cfg.edad_min, message_style=cfg.message_style
         ).persist()
         try:
-            n_valid, n_rejects = ann.agg(
-                F.count(F.when(F.col("motivo").isNull(), 1)),
-                F.count("motivo"),
-            ).first()
+            n_valid, n_rejects = ann.agg(*_valid_reject_counts()).first()
             valid, rejects = split_rejections(ann)
             write_rejects_csv(
                 rejects, Path(cfg.data_rejected) / f"rejected_{csv_file.name}", n_rejects
@@ -403,32 +448,44 @@ def run_directory_combined(
     driver loop. This is the 1000-executor-shaped version of
     ``run_batch``; run_id embeds the file name per the reference contract.
 
-    Returns the audit DataFrame that was appended.
-
-    Audit parity with the per-file loop: rejects are routed to one
-    ``rejected_<file>.csv`` per source file (one partitioned write per
-    distinct header, so each reject file keeps its own columns), and
-    ``inserted_new`` / ``ignored_duplicates`` are computed PER FILE from
-    the anti-join survivors (``idempotent_append(group_col=...)``), not
-    stamped batch-global onto every row.
+    One scan per distinct header, each binding columns by its own header
+    and tagging its own missing required columns; the load is
+    ``_load_files``. Returns the whole audit table (``etl_runs``), earlier
+    runs included.
     """
     from etl_python_sqlite_spark.sources.csv import read_csv_directory
 
-    ts = (now or datetime.now(timezone.utc)).strftime("%Y%m%dT%H%M%S%fZ")
-    started_at = (now or datetime.now(timezone.utc)).isoformat()
+    raws = read_csv_directory(spark, list_csv_files(cfg.data_in))
+    if raws:
+        _load_files(spark, cfg, raws, now)
+    return read_or_empty(spark, cfg.audit_path, AUDIT_SCHEMA)
 
-    # one scan per distinct header, each binding columns by its own header
-    # and tagging its own missing required columns; the cascade carries
-    # source_file row-wise, so each scan feeds the load, the reject sink
-    # and the per-file audit metrics — persist: one materialization each
+
+def _load_files(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    raws: list[DataFrame],
+    now: datetime | None,
+) -> None:
+    """The multi-file load: ``raws`` are all-string frames with a
+    ``source_file`` column, one per header. Each is annotated and
+    persisted (it feeds its reject sink, the load and the audit counts)
+    and its rejects go to one ``rejected_<file>.csv`` per source file,
+    keeping its own columns. The union of their normalized columns is
+    loaded by ``_load_valid`` with ``group_col="source_file"``, so
+    ``inserted_new`` / ``ignored_duplicates`` are counted PER FILE from
+    the anti-join survivors, not stamped batch-global onto every row.
+    One audit row per file is appended to ``etl_runs``.
+    """
+    now = now or datetime.now(timezone.utc)
+    started_at = now.isoformat()
+    run_id = _run_id_col(now)
     groups = [
         annotate_rejections(
             raw, edad_min=cfg.edad_min, message_style=cfg.message_style
         ).persist()
-        for raw in read_csv_directory(spark, list_csv_files(cfg.data_in))
+        for raw in raws
     ]
-    if not groups:
-        return read_or_empty(spark, cfg.audit_path, AUDIT_SCHEMA)
     try:
         for g in groups:
             write_rejects_csv_by_file(split_rejections(g)[1], cfg.data_rejected)
@@ -437,60 +494,29 @@ def run_directory_combined(
             (g.select("source_file", "motivo", "nombre_norm", "ciudad_norm", "edad_int")
              for g in groups),
         )
-
-        valid = ann.filter(F.col("motivo").isNull())
-        dim = upsert_dimension(
-            spark, valid.select(F.col("ciudad_norm").alias("nombre")), cfg.dim_path
-        )
-        resolved = valid.join(F.broadcast(dim), valid.ciudad_norm == dim.nombre).select(
-            F.col("nombre_norm").alias("nombre"),
-            F.col("edad_int").cast("int").alias("edad"),
-            "ciudad_id",
-            "source_file",
-        )
-        batch = (
-            resolved.withColumn("processed_at", F.lit(started_at))
-            .withColumn(
-                "run_id",
-                F.concat(
-                    F.lit(ts + "_"),
-                    F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_"),
-                ),
-            )
-        )
-        res = _append_fact(spark, cfg, batch, group_col="source_file")
+        valid = split_rejections(ann, keep=("source_file",))[0]
+        res = _load_valid(spark, cfg, valid, run_id, started_at, group_col="source_file")
 
         # per_group is already a tiny DISTRIBUTED frame — join it straight
         # into the audit, no driver round trip
-        per_file = res.per_group
         audit = (
             ann.groupBy("source_file")
-            .agg(
-                F.sum(F.when(F.col("motivo").isNull(), 1).otherwise(0)).alias(
-                    "valid_count"
-                ),
-                F.sum(F.when(F.col("motivo").isNotNull(), 1).otherwise(0)).alias(
-                    "rejected_count"
-                ),
-            )
-            .join(F.broadcast(per_file), on="source_file", how="left")
+            .agg(*_valid_reject_counts())
+            .join(F.broadcast(res.per_group), on="source_file", how="left")
             .select(
-                F.concat(
-                    F.lit(ts + "_"),
-                    F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_"),
-                ).alias("run_id"),
+                run_id.alias("run_id"),
                 F.lit(started_at).alias("started_at"),
                 "source_file",
-                F.col("valid_count").cast("long"),
-                F.col("rejected_count").cast("long"),
-                F.coalesce("inserted_new", F.lit(0)).cast("long").alias("inserted_new"),
-                F.coalesce("ignored_duplicates", F.lit(0))
-                .cast("long")
-                .alias("ignored_duplicates"),
+                "valid_count",
+                "rejected_count",
+                # a file without valid rows has no per_group row
+                *[
+                    F.coalesce(c, F.lit(0)).alias(c)
+                    for c in ("inserted_new", "ignored_duplicates")
+                ],
             )
         )
         audit.write.mode("append").parquet(cfg.audit_path)
     finally:
         for g in groups:
             g.unpersist()
-    return spark.read.schema(AUDIT_SCHEMA).parquet(cfg.audit_path)

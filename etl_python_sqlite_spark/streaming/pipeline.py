@@ -5,15 +5,17 @@ dedup across re-runs (reference scr/etl_incremental_audit.py:193-250).
 The natural Spark upgrade is a file-arrival-driven Structured Streaming
 job with identical per-batch semantics:
 
-    readStream(csv dir) ─► motivo cascade ─► foreachBatch:
+    readStream(csv dir) ─► foreachBatch ─► motivo cascade:
         rejects  → per-file reject CSVs
         valid    → dim upsert + fact idempotent append + audit rows
 
-``foreachBatch`` reuses the SAME library code as the batch path — the
-idempotent-append contract makes micro-batch replays safe (at-least-once
-delivery + first-writer-wins dedup ⇒ effectively-exactly-once on the
-natural key), which is precisely why the reference's INSERT OR IGNORE
-semantic translates so well to streaming.
+``foreachBatch`` reuses the SAME library code as the batch path: the
+multi-file load core of ``pipeline.run_directory_combined``, so the
+warehouse layout (``fact_table``) and the audit rows are the batch
+path's. The idempotent-append contract makes micro-batch replays safe
+(at-least-once delivery + first-writer-wins dedup ⇒ effectively-exactly-
+once on the natural key), which is precisely why the reference's INSERT
+OR IGNORE semantic translates so well to streaming.
 
 Also here: a watermarked tumbling-window aggregation over the ``events``
 stream shape (late-data tolerant), the streaming analog of
@@ -22,19 +24,14 @@ stream shape (late-data tolerant), the streaming analog of
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-from pathlib import Path
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_python_sqlite_spark.operators.transform import annotate_rejections
-from etl_python_sqlite_spark.pipeline import (
-    FACT_NATURAL_KEY,
-    FACT_SCHEMA,
-    PipelineConfig,
-)
+from etl_python_sqlite_spark import pipeline
+from etl_python_sqlite_spark.pipeline import PipelineConfig
 from etl_python_sqlite_spark.sources.csv import source_file_name
 
 RAW_CSV_SCHEMA = T.StructType(
@@ -66,104 +63,17 @@ def process_microbatch(
     batch_id: int,
     now: datetime | None = None,
 ) -> None:
-    """foreachBatch body — same load semantics as pipeline.run_batch but
-    driven by whatever files arrived in this micro-batch. Idempotent under
-    replay: a re-delivered file inserts 0 new fact rows."""
-    from etl_python_sqlite_spark.operators.idempotent import (
-        idempotent_append,
-        upsert_dimension,
-    )
-    from etl_python_sqlite_spark.pipeline import write_rejects_csv_by_file
-
+    """foreachBatch body — the multi-file load of
+    ``pipeline.run_directory_combined`` (``pipeline._load_files``) over
+    whatever files arrived in this micro-batch. Idempotent under replay: a
+    re-delivered file inserts 0 new fact rows."""
+    # one cache per micro-batch, released before the next one: a streaming
+    # job runs this body once per micro-batch, so a leak grows without bound
     batch_df = batch_df.persist()
-    ann = None
     try:
-        if batch_df.isEmpty():
-            return
-        ts = (now or datetime.now(timezone.utc)).strftime("%Y%m%dT%H%M%S%fZ")
-        started_at = (now or datetime.now(timezone.utc)).isoformat()
-
-        # extra columns (source_file) pass through the cascade untouched
-        ann = annotate_rejections(
-            batch_df, edad_min=cfg.edad_min, message_style=cfg.message_style
-        ).persist()
-
-        # reject sink: one CSV per source file, single partitioned write
-        rejects = ann.filter(F.col("motivo").isNotNull()).select(
-            F.coalesce("nombre", F.lit("")).alias("nombre"),
-            F.coalesce("edad", F.lit("")).alias("edad"),
-            F.coalesce("ciudad", F.lit("")).alias("ciudad"),
-            "motivo",
-            "source_file",
-        )
-        write_rejects_csv_by_file(rejects, cfg.data_rejected)
-
-        valid = ann.filter(F.col("motivo").isNull())
-        dim = upsert_dimension(
-            spark, valid.select(F.col("ciudad_norm").alias("nombre")), cfg.dim_path
-        )
-        resolved = valid.join(
-            F.broadcast(dim), valid.ciudad_norm == dim.nombre
-        ).select(
-            F.col("nombre_norm").alias("nombre"),
-            F.col("edad_int").cast("int").alias("edad"),
-            "ciudad_id",
-            "source_file",
-        )
-        run_id_col = F.concat(
-            F.lit(ts + "_"), F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_")
-        )
-        batch = resolved.withColumn("processed_at", F.lit(started_at)).withColumn(
-            "run_id", run_id_col
-        )
-        # group_col threads source_file through the anti-join so each
-        # (run, file) audit row carries ITS OWN inserted/ignored counts,
-        # not microbatch-global ones (the per-(run,file) audit contract);
-        # persona_id continues after the fact's max, inside the write plan
-        res = idempotent_append(
-            spark,
-            batch,
-            cfg.fact_path,
-            FACT_NATURAL_KEY,
-            target_schema=FACT_SCHEMA,
-            id_col="persona_id",
-            group_col="source_file",
-        )
-
-        # per_group is already a tiny distributed frame keyed on source_file
-        per_file = res.per_group
-        audit = (
-            ann.groupBy("source_file")
-            .agg(
-                F.sum(F.when(F.col("motivo").isNull(), 1).otherwise(0))
-                .cast("long")
-                .alias("valid_count"),
-                F.sum(F.when(F.col("motivo").isNotNull(), 1).otherwise(0))
-                .cast("long")
-                .alias("rejected_count"),
-            )
-            .join(F.broadcast(per_file), on="source_file", how="left")
-            .select(
-                F.concat(
-                    F.lit(ts + "_"),
-                    F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_"),
-                ).alias("run_id"),
-                F.lit(started_at).alias("started_at"),
-                "source_file",
-                "valid_count",
-                "rejected_count",
-                F.coalesce("inserted_new", F.lit(0)).cast("long").alias("inserted_new"),
-                F.coalesce("ignored_duplicates", F.lit(0))
-                .cast("long")
-                .alias("ignored_duplicates"),
-            )
-        )
-        audit.write.mode("append").parquet(cfg.audit_path)
+        if not batch_df.isEmpty():
+            pipeline._load_files(spark, cfg, [batch_df], now)
     finally:
-        # release BOTH per-batch caches — a streaming job runs this body
-        # once per micro-batch, so a leaked cache grows without bound
-        if ann is not None:
-            ann.unpersist()
         batch_df.unpersist()
 
 

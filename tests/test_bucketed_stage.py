@@ -299,3 +299,25 @@ def test_lru_eviction_defers_table_drop_to_last_consumer(spark, minhash_gate):
     del pairs, evicted
     gc.collect()
     assert not spark.catalog.tableExists(tbl)  # finalizer dropped it
+
+
+def test_stage_table_rebuild_under_live_evicted_handle(spark):
+    """A stage rebuilt under the same key while a handle of the evicted
+    build is still live gets a table of its own: the old handle's
+    finalizer drops only the old table, and the new handle keeps running
+    (ROADMAP carried item 4)."""
+    from etl_python_sqlite_spark.operators import cache as C
+
+    def build():
+        stage = spark.range(10).selectExpr("id AS u", "id % 3 AS v")
+        return C.bucketed_stage_table(stage, "stage_rebuild_", ("app", "k"), 2, ("u",))
+
+    first = build()
+    second = build()
+    tables = {getattr(first, C.STAGE_TABLE_ATTR), getattr(second, C.STAGE_TABLE_ATTR)}
+    del first
+    gc.collect()
+    assert second.count() == 10
+    del second
+    gc.collect()
+    assert not any(spark.catalog.tableExists(t) for t in tables)

@@ -432,3 +432,105 @@ def test_combined_run_matches_per_file_on_mixed_headers(spark, tmp_path):
     assert set(rejects) == {"rejected_a reordered+1%.csv", "rejected_b_sin_ciudad_\u00f1.csv"}
     assert rejects["rejected_a reordered+1%.csv"][0] == ["ciudad", "edad", "nombre", "motivo"]
     assert fact == [("Guillermo", 26), ("Noemi", 52), ("Sofia", 29)]
+
+
+# ---------------------------------------------------------------------------
+# One load core: the combined and streaming drivers share the multi-file load
+# ---------------------------------------------------------------------------
+
+#: Spark jobs of the warm two-file drop above under run_directory_combined
+#: (one header group per file), at the test session's settings. Before the
+#: shared load core it ran 30: the reject sink collected a per-file reject
+#: count that no caller read, two jobs per header group.
+COMBINED_DROP_JOBS = 26
+
+MICROBATCH_SCHEMA = "nombre string, edad string, ciudad string, source_file string"
+
+
+def _microbatch(spark, files: dict[str, list[list[str]]]):
+    """A static stand-in for a streaming micro-batch: the CSV rows of
+    ``files`` (header first) in the stream's fixed three-column schema."""
+    rows = [tuple(r) + (name,) for name, data in files.items() for r in data[1:]]
+    return spark.createDataFrame(rows, MICROBATCH_SCHEMA)
+
+
+def test_warm_two_file_drop_combined_job_budget(spark, tmp_path):
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rej"),
+        warehouse=str(tmp_path / "wh"),
+    )
+    _two_file_drop(Path(cfg.data_in))
+    run_directory_combined(spark, cfg, now=NOW)  # warm-up; creates the warehouse
+    jobs = _jobs_of(spark, lambda: run_directory_combined(spark, cfg, now=NOW))
+    assert jobs <= COMBINED_DROP_JOBS
+
+
+def test_microbatch_honours_fact_table(spark, tmp_path):
+    """The streaming micro-batch loads into the configured warehouse
+    layout: with ``fact_table`` set, the bucketed catalog table, and no
+    path-layout fact."""
+    import os
+
+    from etl_python_sqlite_spark.streaming.pipeline import process_microbatch
+
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rej"),
+        warehouse=str(tmp_path / "wh"),
+        fact_table="personas_limpias_mb",
+        fact_buckets=4,
+    )
+    spark.sql(f"DROP TABLE IF EXISTS {cfg.fact_table}")
+    batch = _microbatch(spark, {"a_dirty.csv": DIRTY, "b_clean.csv": CLEAN})
+    try:
+        process_microbatch(spark, cfg, batch, 0, now=NOW)
+        fact = spark.table(cfg.fact_table).collect()
+        assert sorted((r["persona_id"], r["nombre"], r["edad"]) for r in fact) == [
+            (1, "Guillermo", 26), (2, "Marta", 33), (3, "Noemi", 52), (4, "Sofia", 29),
+        ]
+        assert not os.path.exists(cfg.fact_path)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {cfg.fact_table}")
+
+
+def test_microbatch_matches_combined_run(spark, tmp_path):
+    """A micro-batch of two files (a cross-file duplicate, rejects) and
+    run_directory_combined over the same two CSVs, at the same ``now``,
+    leave identical audit rows (run_id included), reject file bytes,
+    fact and dim rows."""
+    from etl_python_sqlite_spark.streaming.pipeline import process_microbatch
+
+    files = {"a_dirty.csv": DIRTY, "b_clean.csv": CLEAN}
+
+    def run(name, load):
+        cfg = PipelineConfig(
+            data_in=str(tmp_path / "in"),
+            data_rejected=str(tmp_path / f"rej_{name}"),
+            warehouse=str(tmp_path / f"wh_{name}"),
+        )
+        load(cfg)
+
+        def rows(path):
+            return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+        rejects = {
+            p.name: p.read_bytes() for p in Path(cfg.data_rejected).glob("rejected_*.csv")
+        }
+        return rows(cfg.audit_path), rejects, rows(cfg.fact_path), rows(cfg.dim_path)
+
+    for name, data in files.items():
+        _write_csv(tmp_path / "in" / name, data)
+    combined = run("combined", lambda cfg: run_directory_combined(spark, cfg, now=NOW))
+    streamed = run(
+        "stream",
+        lambda cfg: process_microbatch(spark, cfg, _microbatch(spark, files), 0, now=NOW),
+    )
+    assert streamed == combined
+    audit, rejects, fact, _ = combined
+    assert [(r[0], r[2], r[3:]) for r in audit] == [
+        ("20240601T120000000000Z_a_dirty_csv", "a_dirty.csv", (3, 2, 3, 0)),
+        ("20240601T120000000000Z_b_clean_csv", "b_clean.csv", (2, 0, 1, 1)),
+    ]
+    assert set(rejects) == {"rejected_a_dirty.csv"}
+    assert len(fact) == 4
